@@ -73,6 +73,13 @@ def host_probe(spark) -> float:
     return round(best, 3)
 
 
+def _cpus() -> int:
+    """The session's ``local[]`` thread count: ``SPARK_GRAFT_CPUS``, or
+    every core when it is ``*``, as ``local[*]`` means."""
+    val = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    return int(val) if val.isdigit() else os.cpu_count() or 1
+
+
 def main() -> None:
     import gc
 
@@ -334,7 +341,7 @@ def main() -> None:
             # probe normalizes box SPEED, not core count; inherited
             # r12 breakage when the driver's c8 refresh landed as the
             # committed BENCH_DETAIL)
-            "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+            "cpus": _cpus(),
             "sf": sf_val,
         }
     )
@@ -362,7 +369,7 @@ def main() -> None:
             ),
             "host_probe_seconds": probe_sec,
             "fresh_warehouse": fresh_mode,
-            "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+            "cpus": _cpus(),
             "sf": sf_val,
             "queries": timings,
         },

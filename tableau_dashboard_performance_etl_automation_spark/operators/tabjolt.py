@@ -260,6 +260,94 @@ def q_improvements(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# --- the daily report as three executions ---------------------------------
+# ``pipeline.run_report`` collects these instead of the nine builders
+# above: one scan-and-aggregate for the five metrics and the trend, one
+# comparison for both tables, and today's samples. Steps 2 and 3 take the
+# anchor date step 1 returned as a literal, so neither plan recomputes it.
+# Their results equal the registered builders' (tests/test_reports.py).
+
+
+def report_summary(e: DataFrame) -> DataFrame:
+    """One row: ``anchor_date``, today's ``avg_today``/``max_today``/
+    ``min_today``, ``last_run_ts``, ``historic_avg`` and ``trend``, the
+    sorted (summary_date, summary_value) series of ``q_trend_series``."""
+    daily = e.groupBy("event_date").agg(
+        F.round(F.avg("value"), 4).alias("daily_avg4"),
+        F.max("value").alias("daily_max"),
+        F.min("value").alias("daily_min"),
+        F.max("ts").alias("daily_last_ts"),
+    )
+
+    def on_anchor(col: str) -> F.Column:
+        return floor_int(F.max_by(col, "event_date"))
+
+    return daily.agg(
+        F.max("event_date").alias("anchor_date"),
+        on_anchor("daily_avg4").alias("avg_today"),
+        on_anchor("daily_max").alias("max_today"),
+        on_anchor("daily_min").alias("min_today"),
+        F.date_format(F.max("daily_last_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
+            "last_run_ts"
+        ),
+        F.floor(F.round(F.avg("daily_avg4"), 4)).cast("int").alias("historic_avg"),
+        F.sort_array(
+            F.collect_list(
+                F.struct(
+                    F.date_format("event_date", "yyyy-MM-dd").alias("summary_date"),
+                    floor_int(F.col("daily_avg4")).alias("summary_value"),
+                )
+            )
+        ).alias("trend"),
+    )
+
+
+def _at_anchor(e: DataFrame, anchor) -> DataFrame:
+    return e.withColumn("anchor_date", F.lit(anchor).cast("date"))
+
+
+def report_comparison(e: DataFrame, anchor) -> DataFrame:
+    """The rows of ``q_regressions`` and ``q_improvements`` together,
+    unordered: one baseline broadcast to the 3-day window, where a
+    regression must also fall on the anchor date. The two filters
+    exclude each other, so ``avg_elapsed_ms < current_elapsed_ms`` tells
+    a regression from an improvement."""
+    window = _key_filter(_current_window(_at_anchor(e, anchor), lookback_days=3))
+    bb = window.select(
+        floor_int(F.col("value")).alias("current_elapsed_ms"),
+        F.col("event_type").alias("response_message"),
+        (
+            ts_from_epoch_ms_string(F.col("ts_ms"))
+            >= F.col("anchor_date").cast("timestamp")
+        ).alias("today"),
+    )
+    aa = _baseline(e)
+    avg, cur = F.col("avg_elapsed_ms"), F.col("current_elapsed_ms")
+    pct = guarded_pct_diff(avg, cur)
+    return (
+        bb.join(F.broadcast(aa), aa.response == bb.response_message)
+        .filter((F.col("today") & (avg < cur)) | ((avg > cur) & (pct < -40.0)))
+        .select(
+            avg, cur, "response_message", pct.alias("percentage_difference")
+        )
+    )
+
+
+def report_samples(e: DataFrame, anchor) -> DataFrame:
+    """``q_samples_today`` with the anchor date given."""
+    return (
+        _key_filter(_current_window(_at_anchor(e, anchor)))
+        .filter(F.col("props").rlike('"k": [0-9]+'))
+        .select(
+            floor_int(F.col("value")).alias("elapsed_time"),
+            "user_id",
+            F.col("event_type").alias("request_label"),
+            F.col("props").alias("response_message"),
+        )
+        .orderBy(F.col("elapsed_time").desc())
+    )
+
+
 QUERIES = {
     "q_summary_avg_today": q_summary_avg_today,
     "q_summary_max_today": q_summary_max_today,

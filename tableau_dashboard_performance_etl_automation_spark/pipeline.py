@@ -1,21 +1,22 @@
-"""End-to-end daily-report pipeline — the engine's equivalent of the
-reference's ``__main__`` block (tabjolt_email.py:345-394):
+"""The daily report — the engine's equivalent of the reference's
+``__main__`` block (tabjolt_email.py:345-394) after its load step:
 
-    extract (files/s3a) → load with reject capture → the nine
-    queries → chart + HTML report → (optional) SMTP send.
+    the report queries over the ``events`` table → chart + HTML
+    report → (optional) SMTP send.
 
-Differences by design: extraction is a Spark read (s3a:// URIs go
-straight to the distributed reader — no driver-side boto3 download
-step), loads are the PERMISSIVE reject-capturing reader
-(sources/delimited.py), and all analytics are DataFrame plans
-(operators/tabjolt.py). Only the final human-sized report rows are
-ever collected.
+``run_report`` reads the parquet ``events`` table under ``sf_dir``
+(``catalog.load_table``; local or ``s3a://``). It does not extract or
+load files: the reference's delimited bulk load with reject capture is
+``sources.delimited.load_manifest``. The queries are the three report
+plans of ``operators/tabjolt.py``, which return what the reference's
+nine queries return; only the final human-sized report rows are ever
+collected.
 """
 
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
@@ -35,7 +36,6 @@ class PipelineResult:
     improvements: list[tuple]
     html_report: str
     chart_path: str | None = None
-    rejected_counts: dict[str, int] = field(default_factory=dict)
 
 
 def load_config(config_file: str) -> dict:
@@ -43,6 +43,12 @@ def load_config(config_file: str) -> dict:
     sections; tabjolt_email.py:12-15)."""
     with open(config_file) as f:
         return json.load(f)
+
+
+def _by_pct_desc(rows: list[tuple]) -> list[tuple]:
+    """Sort comparison rows by ``percentage_difference`` descending, nulls
+    last, as Spark's ``desc()`` orders them."""
+    return sorted(rows, key=lambda r: (r[3] is None, -(r[3] or 0.0)))
 
 
 def run_report(
@@ -58,35 +64,27 @@ def run_report(
     is an explicit opt-in with real credentials, mirroring the
     reference's config-driven send (tabjolt_email.py:389-394).
     """
-    q = tabjolt.QUERIES
+    e = tabjolt._events(spark, sf_dir)
+    summary = tabjolt.report_summary(e).collect()[0]
     metrics = [
-        (
-            "Average time for the latest run (ms)",
-            q["q_summary_avg_today"](spark, sf_dir).collect()[0][0],
-        ),
-        (
-            "Maximum time for the latest run (ms)",
-            q["q_summary_max_today"](spark, sf_dir).collect()[0][0],
-        ),
-        (
-            "Minimum time for the latest run (ms)",
-            q["q_summary_min_today"](spark, sf_dir).collect()[0][0],
-        ),
-        (
-            "Latest event at",
-            q["q_last_run_ts"](spark, sf_dir).collect()[0][0],
-        ),
-        (
-            "Historic average (ms)",
-            q["q_historic_avg"](spark, sf_dir).collect()[0][0],
-        ),
+        ("Average time for the latest run (ms)", summary.avg_today),
+        ("Maximum time for the latest run (ms)", summary.max_today),
+        ("Minimum time for the latest run (ms)", summary.min_today),
+        ("Latest event at", summary.last_run_ts),
+        ("Historic average (ms)", summary.historic_avg),
     ]
-    regressions = [tuple(r) for r in q["q_regressions"](spark, sf_dir).collect()]
-    samples = [tuple(r) for r in q["q_samples_today"](spark, sf_dir).collect()]
-    improvements = [
-        tuple(r) for r in q["q_improvements"](spark, sf_dir).collect()
+    trend_rows = [tuple(r) for r in summary.trend]
+    compared = [
+        tuple(r)
+        for r in tabjolt.report_comparison(e, summary.anchor_date).collect()
     ]
-    trend_rows = [tuple(r) for r in q["q_trend_series"](spark, sf_dir).collect()]
+    # regressions have avg < current, improvements avg > current
+    regressions = _by_pct_desc([r for r in compared if r[0] < r[1]])
+    improvements = _by_pct_desc([r for r in compared if r[0] > r[1]])
+    samples = [
+        tuple(r)
+        for r in tabjolt.report_samples(e, summary.anchor_date).collect()
+    ]
 
     chart_path = (
         chart.render_trend_chart(trend_rows, chart_out) if chart_out else None

@@ -76,7 +76,10 @@ def load_delimited(
     )
     # One scan feeds both splits; caching avoids re-parsing the file
     # for the reject write. At cluster scale this is executor-local
-    # memory/disk, never the driver.
+    # memory/disk, never the driver. A cache entry left by an earlier
+    # load of the same path would serve that load's rows even if the
+    # file has since changed, so drop it first.
+    raw.unpersist()
     raw = raw.cache()
     good = raw.filter(F.col(_CORRUPT).isNull()).drop(_CORRUPT)
     rejected = raw.filter(F.col(_CORRUPT).isNotNull()).select(

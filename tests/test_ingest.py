@@ -94,6 +94,19 @@ def test_tabjolt_console_lines_are_rejected(spark, tmp_path):
     assert any("EXTRA" in ln for ln in spilled)
 
 
+def test_reload_of_rewritten_file_sees_new_contents(spark, tmp_path):
+    """A second load of the same path in one session must not be served
+    from the first load's cached scan."""
+    p = tmp_path / "summary_line.csv"
+    p.write_text("Avg,1,2024-07-30\nMin,2,2024-07-30\n")
+    assert load_delimited(spark, str(p), SUMMARY_SCHEMA).counts() == (2, 0)
+    p.write_text(
+        "Avg,1,2024-07-30\nMin,2,2024-07-30\nMax,3,2024-07-30\n"
+        '"unterminated,4,2024-07-30\n'
+    )
+    assert load_delimited(spark, str(p), SUMMARY_SCHEMA).counts() == (3, 1)
+
+
 def test_typed_schema_coercion_failure_rejects_row(spark, tmp_path):
     # wincounter.tsv shape: typed columns, tab-delimited (SURVEY §1.2)
     schema = StructType(

@@ -910,7 +910,7 @@ def test_perf_budget_gate_heavies_carry_scale_evidence():
     # plan-unchanged TPC-H scan heavies tripped the 32-core floor).
     # Scale the absolute floor by the core deficit; the 3×-median
     # relative guard below is core-count-free and stays as-is.
-    core_factor = max(1.0, 32.0 / bench.get("cpus", 32))
+    core_factor = max(1.0, 32.0 / max(1, bench.get("cpus", 32)))
     budget = max(
         2.0 * host_factor * core_factor,
         3.0 * statistics.median(timings.values()),

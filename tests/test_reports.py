@@ -3,7 +3,13 @@ MIME assembly, and the end-to-end report pipeline."""
 
 from __future__ import annotations
 
+from collections import Counter
+
+import pytest
+
 from tableau_dashboard_performance_etl_automation_spark import pipeline
+from tableau_dashboard_performance_etl_automation_spark.catalog import load_table
+from tableau_dashboard_performance_etl_automation_spark.operators import tabjolt
 from tableau_dashboard_performance_etl_automation_spark.reports import (
     chart,
     email_sink,
@@ -132,3 +138,86 @@ def test_run_report_end_to_end(spark, sf_dir):
     assert res.regressions and res.samples
     # every section's rows made it into the html
     assert str(res.regressions[0][1]) in res.html_report
+
+
+#: The registered builder behind each of run_report's five metrics.
+METRIC_QUERIES = (
+    "q_summary_avg_today",
+    "q_summary_max_today",
+    "q_summary_min_today",
+    "q_last_run_ts",
+    "q_historic_avg",
+)
+
+
+@pytest.fixture
+def empty_events_dir(spark, sf_dir, tmp_path):
+    out = tmp_path / "empty"
+    load_table(spark, sf_dir, "events").limit(0).write.parquet(
+        str(out / "events.parquet")
+    )
+    return str(out)
+
+
+@pytest.mark.parametrize("which", ["sf_dir", "empty_events_dir"])
+def test_run_report_equals_registered_builders(
+    spark, request, tmp_path, monkeypatch, which
+):
+    """run_report's three plans return what the nine registered
+    builders return, also 0/NULL on an empty events table."""
+    src = request.getfixturevalue(which)
+    charted = []
+    monkeypatch.setattr(
+        chart, "render_trend_chart", lambda rows, out: charted.append(rows)
+    )
+    res = pipeline.run_report(spark, src, chart_out=str(tmp_path / "c.png"))
+
+    def rows(name):
+        return [tuple(r) for r in tabjolt.QUERIES[name](spark, src).collect()]
+
+    assert [v for _, v in res.metrics] == [rows(q)[0][0] for q in METRIC_QUERIES]
+    for got, name in (
+        (res.regressions, "q_regressions"),
+        (res.samples, "q_samples_today"),
+        (res.improvements, "q_improvements"),
+    ):
+        want = rows(name)
+        assert Counter(got) == Counter(want), name
+        if name != "q_samples_today":
+            assert [r[3] for r in got] == [r[3] for r in want], name
+    assert charted == [rows("q_trend_series")]
+    if which == "sf_dir":
+        assert res.regressions and res.improvements and res.samples
+
+
+def test_pct_order_matches_spark_desc(spark):
+    rows = [
+        (0.0, 5, "a", None),
+        (10.0, 15, "b", 50.0),
+        (10.0, 5, "c", -50.0),
+        (10.0, 10, "d", 0.0),
+        (0.0, 7, "e", None),
+        (10.0, 11, "f", 10.0),
+    ]
+    df = spark.createDataFrame(rows, "a double, c int, k string, pct double")
+    want = [r.pct for r in df.orderBy(df.pct.desc()).collect()]
+    assert [r[3] for r in pipeline._by_pct_desc(rows)] == want
+
+
+def test_run_report_is_three_collects_over_one_events_load(
+    spark, sf_dir, monkeypatch
+):
+    collects, loads = [], []
+    df_type = type(spark.range(1))
+    real_collect = df_type.collect
+    monkeypatch.setattr(
+        df_type, "collect", lambda self: collects.append(1) or real_collect(self)
+    )
+    monkeypatch.setattr(
+        tabjolt,
+        "load_table",
+        lambda *a: loads.append(a[2]) or load_table(*a),
+    )
+    pipeline.run_report(spark, sf_dir)
+    assert len(collects) == 3
+    assert loads == ["events"]
